@@ -457,6 +457,7 @@ _SHED_ORDER = [
 
 def summary_line(summary: dict) -> str:
     """Render the driver-visible JSON line, never dropping ``queries``."""
+    summary = dict(summary)  # shed from a copy: the caller's dict stays whole
     line = json.dumps(summary, separators=(",", ":"))
     for key in _SHED_ORDER:
         if len(line) <= LINE_BUDGET:

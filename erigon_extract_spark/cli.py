@@ -123,16 +123,13 @@ def _build(args) -> int:
         recover_code_hashes,
         split_plain_state,
     )
+    from erigon_extract_spark.plans.pipeline import write_full_history
     from erigon_extract_spark.plans.transpose import build_state_history
     from erigon_extract_spark.schemas import (
         ACCOUNT_CHANGESETS,
         PLAIN_CODE_HASH,
         PLAIN_STATE,
         STORAGE_CHANGESETS,
-    )
-    from erigon_extract_spark.sources.tables import (
-        write_manifest,
-        write_sorted_parquet,
     )
 
     spark = _spark()
@@ -156,12 +153,7 @@ def _build(args) -> int:
     ps_stor = decode_storage_changesets(ps_s).drop("decode_error")
     sh = build_state_history(acct, stor, ps_acct, ps_stor,
                              num_partitions=args.partitions)
-    write_sorted_parquet(
-        sh, args.out, ["address", "kind", "incarnation", "slot", "block_from"],
-        num_partitions=args.partitions,
-    )
-    manifest = write_manifest(spark.read.parquet(args.out), args.out)
-    print(manifest)
+    print(write_full_history(sh, args.out))
     return 0
 
 

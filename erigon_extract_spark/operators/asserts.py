@@ -9,6 +9,10 @@ that SHOULD be empty plus an action that raises when it isn't.
 
 Each check is a single aggregation (one shuffle) and short-circuits via
 ``limit(k)`` so a passing check never materializes more than a sample.
+
+``assert_in_row`` is the streaming form, closest to the reference's
+mid-scan abort: no job of its own, the check rides in the consumer's
+pass and fails the task that meets the first violating row.
 """
 
 from __future__ import annotations
@@ -32,6 +36,26 @@ def assert_empty(df: DataFrame, name: str = "assert_empty", sample: int = 5) -> 
     rows = df.limit(sample).collect()
     if rows:
         raise AssertionViolation(name, rows)
+
+
+def assert_in_row(
+    df: DataFrame,
+    on: str,
+    violation: F.Column,
+    name: str,
+    detail: F.Column,
+) -> DataFrame:
+    """Lazy per-row check: ``on`` passes through unchanged, and a row where
+    ``violation`` is true raises ``"<name>: <detail>"`` when evaluated (a
+    NULL verdict passes, as it does for the ``filter`` + ``assert_empty``
+    form).
+
+    The check is a projection, not a filter: Catalyst pushes a filter
+    below a Python UDF's projection and evaluates the UDF twice. Pick an
+    ``on`` column every consumer reads (a join, partition or output key),
+    or column pruning drops the check with it."""
+    msg = F.concat(F.lit(f"{name}: "), detail)
+    return df.withColumn(on, F.when(violation, F.raise_error(msg)).otherwise(F.col(on)))
 
 
 def assert_unique_keys(df: DataFrame, key_cols: Sequence[str], name: str | None = None) -> None:

@@ -11,7 +11,7 @@ recovery is a broadcast left join instead of 10^9 point lookups.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from erigon_extract_spark.functions.decode import (
@@ -31,9 +31,10 @@ def decode_account_changesets(
 
     Range predicates (reference seek/stop, erigon_extract.c:1537,
     1598-1600) are plain filters — Catalyst pushes them into the scan.
-    Malformed blobs surface in ``decode_error``; with strict=True the
-    caller should assert_empty on the error subset (reference hard-errors,
-    erigon_extract.c:1561-1567).
+    Malformed blobs surface in ``decode_error``; a strict caller fails the
+    row in its own pass (``pipeline.build_full_history`` checks it with
+    ``assert_in_row``), as the reference hard-errors mid-scan
+    (erigon_extract.c:1561-1567).
     """
     if block_start is not None:
         acs = acs.filter(F.col("block") >= block_start)
@@ -98,10 +99,15 @@ def split_plain_state(plain_state: DataFrame) -> tuple[DataFrame, DataFrame]:
     return accounts, storage
 
 
+def malformed_key() -> Column:
+    """True on a PlainState key that is neither an account (20 bytes) nor a
+    storage (28 bytes) key (reference hard-errors, erigon_extract.c:1703-1719)."""
+    return ~F.length("key").isin(20, 28)
+
+
 def plain_state_malformed(plain_state: DataFrame) -> DataFrame:
-    """Rows violating the key-length discriminator (reference hard-errors,
-    erigon_extract.c:1703-1719). Use with assert_empty."""
-    return plain_state.filter(~F.length("key").isin(20, 28))
+    """Rows violating the key-length discriminator. Use with assert_empty."""
+    return plain_state.filter(malformed_key())
 
 
 def recover_code_hashes(
@@ -149,10 +155,13 @@ def recover_code_hashes(
     return out
 
 
+def code_hash_inconsistent() -> Column:
+    """True on an account row that violates the incarnation/code-hash
+    consistency rule (erigon_extract.c:294-300, 840-846): incarnation == 0
+    requires an all-zero code_hash."""
+    return (F.col("incarnation") == 0) & (F.col("code_hash") != F.lit(ZERO_HASH))
+
+
 def code_hash_inconsistencies(accounts: DataFrame) -> DataFrame:
-    """Violations of the incarnation/code-hash consistency rule
-    (erigon_extract.c:294-300, 840-846): incarnation == 0 requires all-zero
-    code_hash. Use with assert_empty."""
-    return accounts.filter(
-        (F.col("incarnation") == 0) & (F.col("code_hash") != F.lit(ZERO_HASH))
-    )
+    """Rows violating ``code_hash_inconsistent``. Use with assert_empty."""
+    return accounts.filter(code_hash_inconsistent())

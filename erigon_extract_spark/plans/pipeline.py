@@ -15,12 +15,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from erigon_extract_spark.operators.asserts import assert_empty
+# assert_empty is unused here but stays importable as pipeline.assert_empty:
+# e2ebench/trace.py patches the functions this module binds, by name.
+from erigon_extract_spark.operators.asserts import assert_empty, assert_in_row  # noqa: F401
 from erigon_extract_spark.plans.extract import (
-    code_hash_inconsistencies,
+    code_hash_inconsistent,
     decode_account_changesets,
     decode_storage_changesets,
-    plain_state_malformed,
+    malformed_key,
     recover_code_hashes,
     split_plain_state,
 )
@@ -51,6 +53,12 @@ def latest_block(tables: PipelineTables) -> int:
     return tables.account_changesets.agg(F.max("block")).first()[0]
 
 
+def _decoded(df: DataFrame, name: str) -> DataFrame:
+    """Fail the row whose blob did not decode, in the consumer's pass."""
+    err = F.col("decode_error")
+    return assert_in_row(df, "address", err.isNotNull(), name, err)
+
+
 def build_full_history(
     spark: SparkSession,
     tables: PipelineTables,
@@ -62,36 +70,46 @@ def build_full_history(
 
     prune=True keeps only the trailing PRUNE_WINDOW blocks of history
     (earliest = latest - 90000 + 1), exactly the reference's -P semantics.
+
+    strict=True checks every row in the build's own pass, as the reference
+    hard-errors mid-scan (erigon_extract.c:1561-1576, 1703-1719, 294-300):
+    PlainState key lengths, account decode, code-hash consistency and
+    storage decode. A violating row fails the action that consumes the
+    result with ``"<check>: <detail>"``; a failed ``write_full_history``
+    leaves no ``_SUCCESS``, as the reference aborts mid-write. The only job
+    construction launches is ``latest_block``'s.
     """
     latest = latest_block(tables)
     earliest = latest - PRUNE_WINDOW + 1 if prune else None
 
+    plain_state = tables.plain_state
     if strict:
-        assert_empty(
-            plain_state_malformed(tables.plain_state), "plain_state key lengths"
+        plain_state = assert_in_row(
+            plain_state, "key", malformed_key(),
+            "plain_state key lengths",
+            F.concat(F.lit("key of "), F.length("key").cast("string"), F.lit(" bytes")),
         )
 
     acct = decode_account_changesets(
         tables.account_changesets, block_start=earliest, block_end=latest
     )
     if strict:
-        assert_empty(
-            acct.filter(F.col("decode_error").isNotNull()), "account decode"
-        )
+        acct = _decoded(acct, "account decode")
     acct = recover_code_hashes(acct.drop("decode_error"), tables.plain_code_hash)
     if strict:
-        assert_empty(code_hash_inconsistencies(acct), "code-hash consistency")
+        acct = assert_in_row(
+            acct, "address", code_hash_inconsistent(), "code-hash consistency",
+            F.concat(F.lit("incarnation 0 with code hash 0x"), F.hex("code_hash")),
+        )
 
     stor = decode_storage_changesets(
         tables.storage_changesets, block_start=earliest, block_end=latest
     )
     if strict:
-        assert_empty(
-            stor.filter(F.col("decode_error").isNotNull()), "storage decode"
-        )
+        stor = _decoded(stor, "storage decode")
     stor = stor.drop("decode_error")
 
-    ps_a, ps_s = split_plain_state(tables.plain_state)
+    ps_a, ps_s = split_plain_state(plain_state)
     ps_acct = recover_code_hashes(
         decode_account_changesets(ps_a).drop("decode_error"),
         tables.plain_code_hash,
@@ -103,19 +121,23 @@ def build_full_history(
     )
 
 
-def write_full_history(
-    sh: DataFrame, out_path: str, num_partitions: int | None = None
-) -> dict:
+def write_full_history(sh: DataFrame, out_path: str) -> dict:
     """Persist the state history sorted (Parquet row-group stats = the
     seekable-pages property) and write the counts manifest (K3, with the
-    reference's words[6] double-assignment defect fixed by construction)."""
+    reference's words[6] double-assignment defect fixed by construction).
+
+    ``sh`` must come from ``build_state_history`` (or ``build_full_history``):
+    the write adds no shuffle. The transpose's range key
+    (address, kind, __key_inc, slot) never splits an account version group
+    and equals the store key on storage rows, so its partitions are already
+    in store order; sorting within each one gives a globally ordered store.
+    """
     from erigon_extract_spark.sources.tables import write_manifest, write_sorted_parquet
 
     write_sorted_parquet(
         sh,
         out_path,
         sort_cols=["address", "kind", "incarnation", "slot", "block_from"],
-        num_partitions=num_partitions,
     )
     out = sh.sparkSession.read.parquet(out_path)
     return write_manifest(out, out_path)

@@ -90,15 +90,18 @@ def write_sorted_parquet(
     df: DataFrame,
     path: str,
     sort_cols: list[str],
-    num_partitions: int | None = None,
     max_records_per_file: int = 5_000_000,
     bloom_cols: list[str] | None = None,
     bloom_ndv: int = 1_000_000,
 ) -> None:
-    """Range-partition by the sort prefix, sort within partitions, write.
+    """Sort within partitions and write; no shuffle.
 
-    Produces globally range-ordered files whose Parquet row-group min/max
-    stats support pruned point reads on the sort key.
+    The caller passes a range-partitioned ``df``: its partitions hold
+    consecutive ranges of ``sort_cols`` in partition order (e.g. the
+    output of a ``repartitionByRange`` whose key orders rows like
+    ``sort_cols`` across partitions). The files are then globally
+    range-ordered, and their Parquet row-group min/max stats support
+    pruned point reads on the sort key.
 
     ``bloom_cols`` additionally writes a Parquet bloom filter per row
     group for each named column — the physical-layout answer for point
@@ -109,10 +112,6 @@ def write_sorted_parquet(
     the group without reading data pages. ``bloom_ndv`` sizes the filter
     (expected distinct values per row group; over-sizing costs footer
     bytes, under-sizing raises the false-positive rate)."""
-    if num_partitions:
-        df = df.repartitionByRange(num_partitions, *sort_cols)
-    else:
-        df = df.repartitionByRange(*sort_cols)
     writer = (
         df.sortWithinPartitions(*sort_cols)
         .write.option("maxRecordsPerFile", max_records_per_file)

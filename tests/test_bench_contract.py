@@ -78,3 +78,12 @@ def test_queries_map_survives_any_growth():
     assert len(parsed["queries"]) == 200
     assert all(v == 0.12 for v in parsed["queries"].values())  # re-rounded
     assert "total_only" not in json.dumps(parsed)
+
+
+def test_summary_line_leaves_callers_dict_alone():
+    """Shedding and re-rounding work on a copy: the caller's summary (and
+    its queries map) is unchanged after rendering an over-budget line."""
+    s = _summary(200)
+    before = json.loads(json.dumps(s))
+    summary_line(s)
+    assert s == before

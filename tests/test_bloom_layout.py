@@ -41,13 +41,13 @@ def bloom_table(spark, tmp_path_factory):
         .alias("address"),
         (F.col("id") * 31 % 997).alias("nonce"),
     )
+    df = df.repartitionByRange(6, "block")
     with_bloom = str(d / "with_bloom")
     without = str(d / "without")
     write_sorted_parquet(
-        df, with_bloom, ["block"], num_partitions=6,
-        bloom_cols=["address"], bloom_ndv=20_000,
+        df, with_bloom, ["block"], bloom_cols=["address"], bloom_ndv=20_000,
     )
-    write_sorted_parquet(df, without, ["block"], num_partitions=6)
+    write_sorted_parquet(df, without, ["block"])
     return with_bloom, without
 
 

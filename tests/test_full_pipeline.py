@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import dataclasses
+import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,7 +95,7 @@ def test_write_and_manifest(spark, tables):
     sh = build_full_history(spark, t, num_partitions=4)
     out = tempfile.mkdtemp(prefix="full_history_")
     try:
-        manifest = write_full_history(sh, out, num_partitions=2)
+        manifest = write_full_history(sh, out)
         assert manifest["counts"]["total"] == sh.count()
         assert manifest["counts"]["kind_0"] > 0
         back = spark.read.parquet(out)
@@ -102,3 +105,93 @@ def test_write_and_manifest(spark, tables):
         assert read_manifest(spark, out) == manifest
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+_ADDR = b"\xee" * 20
+
+# (check name, table, extra row): one malformed input per strict check
+_VIOLATIONS = [
+    ("account decode", "account_changesets", (1, _ADDR, b"\x10")),  # unknown fieldset bit
+    ("storage decode", "storage_changesets", (1, _ADDR, 1, b"\x01" * 31)),
+    ("plain_state key lengths", "plain_state", (b"\x01" * 21, b"", 1)),
+    # fieldset 8 = code hash only, so incarnation decodes as 0
+    ("code-hash consistency", "account_changesets", (1, _ADDR, bytes([8, 32]) + b"\x11" * 32)),
+]
+
+
+def _with_row(spark, fx, t, table, row):
+    rows = getattr(fx, table) + [row]
+    schema = getattr(t, table).schema
+    return dataclasses.replace(t, **{table: spark.createDataFrame(rows, schema)})
+
+
+@pytest.mark.parametrize("check,table,row", _VIOLATIONS, ids=[v[0] for v in _VIOLATIONS])
+def test_strict_build_fails_in_its_own_pass(spark, tables, tmp_path, check, table, row):
+    """A malformed row fails the strict write with the check's name and
+    leaves no _SUCCESS, as the reference aborts mid-write; strict=False
+    builds past it."""
+    fx, t = tables
+    bad = _with_row(spark, fx, t, table, row)
+    out = str(tmp_path / "strict")
+    with pytest.raises(Exception, match=check):
+        write_full_history(build_full_history(spark, bad, strict=True), out)
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+
+    lenient = str(tmp_path / "lenient")
+    write_full_history(build_full_history(spark, bad, strict=False), lenient)
+    assert os.path.exists(os.path.join(lenient, "_SUCCESS"))
+
+
+@pytest.fixture(scope="module")
+def parquet_tables(spark, tables, tmp_path_factory):
+    """The fixture tables read back from Parquet, as a real build reads them
+    (over the parallelised local rows ``latest_block``'s ``first()`` can
+    take more than one job, scanning partitions in growing batches)."""
+    _, t = tables
+    root = tmp_path_factory.mktemp("chain")
+    parts = {}
+    for f in dataclasses.fields(t):
+        path = str(root / f.name)
+        getattr(t, f.name).write.parquet(path)
+        parts[f.name] = spark.read.parquet(path)
+    return PipelineTables(**parts)
+
+
+def test_strict_build_construction_runs_only_latest_block(spark, parquet_tables):
+    """The strict checks ride in the build's pass: constructing the plan
+    launches latest_block's job and nothing else."""
+    sc = spark.sparkContext
+    sc.setJobGroup("full-build-construct", "laziness probe")
+    try:
+        build_full_history(spark, parquet_tables, strict=True)
+        jobs = sc.statusTracker().getJobIdsForGroup("full-build-construct")
+        assert len(jobs) == 1, f"construction launched jobs: {jobs}"
+    finally:
+        sc.setJobGroup("", "")
+
+
+def test_written_store_is_globally_ordered(spark, tables, tmp_path):
+    """write_full_history adds no shuffle, so the store order rests on the
+    transpose's range partitions: read file by file, in file order, the
+    rows run in (address, kind, incarnation, slot, block_from) order."""
+    _, t = tables
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = str(tmp_path / "store")
+        write_full_history(build_full_history(spark, t, num_partitions=4), out)
+    finally:
+        spark.conf.set(key, old)
+    files = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+    assert len(files) > 1, files
+    keys = []
+    for f in files:
+        cols = pq.read_table(os.path.join(out, f)).to_pydict()
+        keys += [
+            (a, k, inc, s is not None, s or b"", b)
+            for a, k, inc, s, b in zip(
+                cols["address"], cols["kind"], cols["incarnation"], cols["slot"], cols["block_from"]
+            )
+        ]
+    assert keys == sorted(keys)

@@ -10,7 +10,8 @@ For each named headline query (default: all of bench.HEADLINE):
 * times the action both ways: ``count()`` (the bench's timed action,
   kept for comparability) and the noop sink (guide §1.4 — computes every
   column, immune to count-only column pruning);
-* dumps ``explain("formatted")`` to ``plans/r11/<name>_<tag>.txt`` and a
+* dumps ``explain("formatted")`` to
+  ``plans/$SPARK_GRAFT_PLAN_ROUND/<name>_<tag>.txt`` (default ``r12``) and a
   compact plan-shape summary (Exchange count, join strategies, Python
   eval nodes) to stdout.
 
